@@ -13,8 +13,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from ..checkpointing import stage_checkpoint
+from ..sources.sinks import read_parquet_if_exists
 from .windows import latest_per_key
 
 
@@ -43,6 +45,32 @@ def upsert(
     ``scraped_at`` audit column, reference database/schema.sql:833-835).
     """
     return merge_latest(existing.unionByName(updates, allowMissingColumns=True), keys, order_by)
+
+
+def upsert_parquet(
+    spark: SparkSession,
+    path: str,
+    updates: DataFrame,
+    keys: Sequence[str],
+    order_by: Sequence[Column | str],
+) -> DataFrame:
+    """``upsert`` ``updates`` into the parquet table at ``path`` and
+    rewrite it in place (created on the first call); returns the merged
+    table, lineage-cut.
+
+    The write path of both the daily silver merge and the streaming
+    upsert sink. ``stage_checkpoint`` severs the merged frame from the
+    files it read, which is what lets the overwrite target the same path.
+    """
+    existing = read_parquet_if_exists(spark, path)
+    merged = (
+        upsert(existing, updates, keys, order_by)
+        if existing is not None
+        else merge_latest(updates, keys, order_by)
+    )
+    out = stage_checkpoint(merged)
+    out.write.mode("overwrite").parquet(path)
+    return out
 
 
 def merge_coalesce(

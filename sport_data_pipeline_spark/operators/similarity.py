@@ -361,9 +361,12 @@ def lsh_threshold_pairs(
     def table_sig(t: int) -> Column:
         bits = []
         for p in range(n_planes):
-            dot = F.lit(0.0)
-            for i in range(1, dim + 1):
-                dot = dot + F.element_at(F.col("__v"), i).cast("double") * plane_weight(t, p, i)
+            # the fold, not the unrolled dim-term sum: unrolled, the
+            # n_tables × n_planes × dim terms of one projection make Janino
+            # exhaust a 7 GB heap compiling it; same addition order, so
+            # bit-identical dots
+            plane = F.array(*[plane_weight(t, p, i) for i in range(1, dim + 1)])
+            dot = _dot(F.col("__v"), plane)
             bits.append(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(1 << p))
         sig = bits[0]
         for x in bits[1:]:

@@ -17,13 +17,12 @@ the property the reference's ON CONFLICT sinks rely on.
 from __future__ import annotations
 
 import datetime as dt
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .checkpointing import stage_checkpoint
 from .engine import SportsAnalyticsEngine
-from .operators.merge import merge_latest
+from .operators.merge import upsert_parquet
 from .reports import render_report
 from .schemas import MERGE_KEYS, SILVER_TABLES
 from .sources.sinks import read_parquet_if_exists
@@ -41,7 +40,6 @@ class SilverStore:
 
     spark: SparkSession
     root: str
-    _cache: dict[str, DataFrame] = field(default_factory=dict)
 
     def path(self, name: str) -> str:
         return f"{self.root}/{name}"
@@ -51,16 +49,7 @@ class SilverStore:
 
     def merge_write(self, name: str, batch: DataFrame, order_col: str = "ingested_at") -> DataFrame:
         keys = list(MERGE_KEYS.get(name, (batch.columns[0],)))
-        existing = self.read(name)
-        merged = (
-            merge_latest(existing.unionByName(batch, allowMissingColumns=True), keys, [order_col])
-            if existing is not None
-            else merge_latest(batch, keys, [order_col])
-        )
-        # cut lineage so we can overwrite the path we just read
-        out = stage_checkpoint(merged)
-        out.write.mode("overwrite").parquet(self.path(name))
-        return out
+        return upsert_parquet(self.spark, self.path(name), batch, keys, [order_col])
 
 
 def ingest_bronze_batch(

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..checkpointing import stage_checkpoint
-from ..operators.dedup import jaccard_pairs, minhash_near_dup, simhash_near_dup
+from ..operators.dedup import jaccard_pairs, minhash_jaccard_pairs
 from ..operators.entity import resolve_entities
 from ..operators.similarity import (
     build_ivf_index,
@@ -199,8 +199,6 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate generation feeding the exact-Jaccard verifier."""
-    from ..operators.dedup import minhash_jaccard_pairs
-
     d = _t(spark, sf_dir, "documents")
     return minhash_jaccard_pairs(
         d,
@@ -253,8 +251,9 @@ SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.7
 @query("minhash_neardup", survey="dedup-minhash-lsh", oracle=MINHASH_ORACLE)
 def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    return minhash_near_dup(
-        d, "doc_id", "text", threshold=0.7, shingle_n=3, num_hashes=32, bands=8
+    return minhash_jaccard_pairs(
+        d, "doc_id", "text", threshold=0.7, shingle_n=3, num_hashes=32, bands=8,
+        max_bucket_size=100,
     )
 
 
@@ -573,8 +572,9 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     d = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_dup(
-        d, "doc_id", "text", threshold=0.7, shingle_n=3, num_hashes=32, bands=8
+    pairs = minhash_jaccard_pairs(
+        d, "doc_id", "text", threshold=0.7, shingle_n=3, num_hashes=32, bands=8,
+        max_bucket_size=100,
     )
     cc = connected_components(pairs, "id_a", "id_b")
     return cc.select(

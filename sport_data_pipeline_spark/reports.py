@@ -20,21 +20,6 @@ def _rows(df: DataFrame, limit: int = 100) -> list[dict]:
     return [r.asDict(recursive=True) for r in df.limit(limit).collect()]
 
 
-def html_table(df: DataFrame, title: str, limit: int = 100) -> str:
-    """Minimal HTML table renderer (reports.py:298-321 style)."""
-    rows = _rows(df, limit)
-    cols = df.columns
-    head = "".join(f"<th>{c}</th>" for c in cols)
-    body = "".join(
-        "<tr>" + "".join(f"<td>{r.get(c, '')}</td>" for c in cols) + "</tr>" for r in rows
-    )
-    return (
-        f"<html><head><title>{title}</title></head><body>"
-        f"<h1>{title}</h1><table><thead><tr>{head}</tr></thead>"
-        f"<tbody>{body}</tbody></table></body></html>"
-    )
-
-
 def render_report(sections: Mapping[str, DataFrame], title: str, limit: int = 100) -> str:
     """Multi-section report (league dashboard / transfer report shape)."""
     parts = [f"<html><head><title>{title}</title></head><body><h1>{title}</h1>"]

@@ -13,11 +13,31 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: Above this k, ``orderBy().limit(k)`` plans as a sort + limit instead of
+#: TakeOrderedAndProject, which preallocates a k-slot heap in every task:
+#: an effectively unbounded draw (``weighted_sample(df, id, 10**9, w)``)
+#: would ask each task for GBs of heap for a 200-row input. Far above
+#: every k this package plans, far below task-heap scale.
+TOPK_SORT_FALLBACK_THRESHOLD = 100_000
+
+
 def _local_dir() -> str:
     override = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if override:
         return override
     return "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else "/tmp/spark-local"
+
+
+def _driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half of physical memory: local
+    mode is a driver-only JVM, so it gets real heap, but never more than
+    the host can back — a heap blow-up must surface as a Java
+    OutOfMemoryError, not as the kernel killing the JVM."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 // 2**30)}g"
 
 
 def get_session(
@@ -32,25 +52,18 @@ def get_session(
     partitions default to the core count — not Spark's 200 — because at
     local scale 200 partitions of a 60k-row shuffle is pure scheduling
     overhead, and on a real cluster this knob is sized to data volume.
+    Runtime confs come from ``configure_runtime``, applied after
+    ``extra_conf``.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # the bronze_snapshot Python data source prunes snapshot files at
-        # the listing via pushFilters; off by default in Spark 4.1
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        # local mode = driver-only JVM: give it real heap (32 executor
-        # threads × shuffle buffers + broadcasts); override via env.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", _driver_memory())
         # Shuffle/spill to tmpfs when available: local-mode shuffles write
         # many small files and filesystem syscall overhead dominates small
         # stages (observed ~70% system time). A real cluster writes shuffle
@@ -61,6 +74,8 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    configure_runtime(spark)
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
     return spark
 
 
@@ -68,7 +83,8 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally provided session.
 
     The driver harness owns its own SparkSession; these are the confs our
-    operators rely on that can be applied after the fact.
+    operators rely on that can be applied after the fact. ``get_session``
+    applies them too.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # events.parquet stores TIMESTAMP(NANOS) which Spark's reader rejects;
@@ -81,6 +97,9 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     # load_snapshots() additionally degrades to the no-pushdown reader
     # for sessions that never pass through here.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    spark.conf.set(
+        "spark.sql.execution.topKSortFallbackThreshold", str(TOPK_SORT_FALLBACK_THRESHOLD)
+    )
     # Externally built sessions default to 200 shuffle partitions — pure
     # scheduling overhead at harness scale (see get_session); runtime-
     # settable, results are partition-layout-invariant by construction.

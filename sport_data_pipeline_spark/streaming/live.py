@@ -20,9 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from ..checkpointing import stage_checkpoint
-from ..operators.merge import merge_latest
-from ..sources.sinks import read_parquet_if_exists
+from ..operators.merge import upsert_parquet
 
 
 def read_tick_stream(
@@ -69,15 +67,7 @@ def start_upsert_sink(
     spark = stream.sparkSession
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        existing = read_parquet_if_exists(spark, target_path)
-        if existing is not None:
-            merged = merge_latest(
-                existing.unionByName(batch, allowMissingColumns=True), keys, list(order_by)
-            )
-        else:  # first batch: target does not exist yet
-            merged = merge_latest(batch, keys, list(order_by))
-        # stage_checkpoint cuts the lineage so we can overwrite the path we read.
-        stage_checkpoint(merged).write.mode("overwrite").parquet(target_path)
+        upsert_parquet(spark, target_path, batch, keys, list(order_by))
 
     writer = stream.writeStream.foreachBatch(merge_batch).option(
         "checkpointLocation", checkpoint
@@ -87,25 +77,6 @@ def start_upsert_sink(
     elif trigger_seconds:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
-
-
-def windowed_tick_stats(
-    stream: DataFrame,
-    ts_col: str,
-    window_duration: str = "5 minutes",
-    watermark: str = "10 minutes",
-    group_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Tumbling-window aggregate with late-data watermark (the hardening the
-    reference's poll-overwrite model never had — SURVEY §2.9 closing note)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window_duration), *group_cols)
-        .agg(
-            F.count(F.lit(1)).alias("n_ticks"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("value_sum"),
-        )
-    )
 
 
 def session_window_stats(

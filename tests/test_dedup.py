@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from sport_data_pipeline_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
-    minhash_near_dup,
+    minhash_jaccard_pairs,
     simhash_near_dup,
 )
 
@@ -43,7 +43,8 @@ def test_jaccard_pairs_finds_near_dup(docs):
 
 def test_minhash_agrees_with_exact_jaccard_on_dups(docs):
     got = {(r["id_a"], r["id_b"]) for r in
-           minhash_near_dup(docs, "doc_id", "text", threshold=0.5, shingle_n=2).collect()}
+           minhash_jaccard_pairs(docs, "doc_id", "text", threshold=0.5, shingle_n=2,
+                                 num_hashes=16, bands=4, max_bucket_size=100).collect()}
     # exact duplicates can never be missed (identical signatures in every band)
     assert (0, 3) in got
     # verification step guarantees no false positives below threshold
@@ -56,8 +57,6 @@ def test_minhash_jaccard_composite_agrees_with_exact(spark):
     """The scale-safe composite (LSH candidates → exact-Jaccard verify)
     must reproduce the blocked all-pairs result exactly: same pairs, same
     jaccard values, blocks respected."""
-    from sport_data_pipeline_spark.operators.dedup import minhash_jaccard_pairs
-
     rows = []
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lamda mu"
     for i in range(30):
@@ -82,6 +81,33 @@ def test_minhash_jaccard_composite_agrees_with_exact(spark):
     assert comp == exact
     assert exact  # non-vacuous: the planted near-dups were found
     assert not any(100 in p for p in comp)  # blocking respected
+
+
+def test_minhash_unigram_sets_match_exact_jaccard(spark):
+    """At shingle_n=1 the LSH path compares the same token-hash sets as
+    jaccard_pairs: on mutually-near docs (every true pair bands together)
+    it returns exactly jaccard_pairs' pairs and values."""
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lamda mu"
+    rows = []
+    for i in range(12):
+        words = base.split()
+        words[i] = f"tok{i}"
+        rows.append((i, "x", " ".join(words)))
+    rows.append((50, "x", base + " " + base))  # repeated tokens: same set as base
+    rows.append((51, "x", "unrelated words about query planning and shuffles"))
+    df = spark.createDataFrame(rows, "doc_id long, blk string, text string")
+
+    exact = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in jaccard_pairs(df, "doc_id", "text", ["blk"], 0.5, shingle_n=1).collect()
+    }
+    lsh = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in minhash_jaccard_pairs(df, "doc_id", "text", threshold=0.5, shingle_n=1).collect()
+    }
+    spark.catalog.clearCache()
+    assert lsh == exact
+    assert len(exact) > 12  # non-vacuous, including pairs with doc 50
 
 
 def test_simhash_identical_docs_distance_zero(docs):
